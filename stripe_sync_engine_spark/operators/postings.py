@@ -71,6 +71,7 @@ from stripe_sync_engine_spark.operators.incremental_dedup import (
     with_occ_retry,
 )
 from stripe_sync_engine_spark.plans.textops import BM25_B, BM25_K1, tokens_nonempty
+from stripe_sync_engine_spark.session import local_frame
 
 
 class PersistedPostingsIndex:
@@ -672,9 +673,9 @@ class PersistedPostingsIndex:
                 "one batch before querying"
             )
         terms = sorted(set(query_terms))
-        probe = spark.createDataFrame(
-            [(t,) for t in terms], "term string"
-        ).select(F.xxhash64("term").alias("term_h"), "term")
+        probe = local_frame(spark, [(t,) for t in terms], "term string").select(
+            F.xxhash64("term").alias("term_h"), "term"
+        )
         # the table is bucketed by term_h (the signed xxhash64 of the
         # term), so the driver-side probe hashes twice: term → term_h,
         # then the store's bucket hash over term_h's decimal rendering
@@ -701,9 +702,7 @@ class PersistedPostingsIndex:
         # same IEEE double division the Spark agg performed; an all-empty
         # corpus (n_dl == 0) has no postings rows, so avgdl is never read
         avgdl = (float(total_dl) / float(n_dl)) if n_dl else float("nan")
-        stats = spark.createDataFrame(
-            [(n_docs, avgdl)], "n_docs long, avgdl double"
-        )
+        stats = local_frame(spark, [(n_docs, avgdl)], "n_docs long, avgdl double")
         dfreq = hits.groupBy("term").agg(
             F.count_distinct(F.col("doc_id")).cast("double").alias("df")
         )

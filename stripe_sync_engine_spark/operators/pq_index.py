@@ -50,6 +50,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from stripe_sync_engine_spark.session import local_frame
+
 
 def _lloyd(xs: np.ndarray, k: int, iters: int) -> np.ndarray:
     """Deterministic Lloyd's: init = evenly spaced sample rows (the
@@ -1265,7 +1267,8 @@ def rerank_shortlist(
     """Exact-L2 top-k refinement of any (query_id, vec_id) shortlist:
     only the shortlist's full vectors are fetched (broadcast semi-probe,
     |shortlist| rows regardless of corpus size)."""
-    qdf = vecs.sparkSession.createDataFrame(
+    qdf = local_frame(
+        vecs.sparkSession,
         [(int(q), list(map(float, v))) for q, v in queries],
         "query_id long, _qvec array<double>",
     )

@@ -39,6 +39,7 @@ from pyspark.sql.types import StructField, StructType
 
 from stripe_sync_engine_spark.operators.export import sql_h32
 from stripe_sync_engine_spark.plans.registry import register
+from stripe_sync_engine_spark.session import local_frame
 from stripe_sync_engine_spark.tables import load_table, spread_small_scan
 
 SHINGLE_W = 5  # words per shingle
@@ -648,7 +649,7 @@ def alternating_components(
                 StructField("label", cur.schema["v"].dataType, False),
             ]
         )
-        return spark.createDataFrame([(n, find(n)) for n in sorted(nodes)], out_schema), 0
+        return local_frame(spark, [(n, find(n)) for n in sorted(nodes)], out_schema), 0
     # distributed path: now pin the (re-executed) edge set for iteration
     cur = cur.localCheckpoint()
     rounds = 0

@@ -17,6 +17,7 @@ from stripe_sync_engine_spark.operators.export import _shard_col, shard_sql
 from stripe_sync_engine_spark.operators.skew import salted_join, two_level_count_distinct
 from stripe_sync_engine_spark.plans.analytics import SQL_REVENUE_EXPR, as_double, revenue_expr
 from stripe_sync_engine_spark.plans.registry import register
+from stripe_sync_engine_spark.session import local_frame
 from stripe_sync_engine_spark.tables import load_table
 
 N_SALT = 8
@@ -172,9 +173,7 @@ def q32_deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintained outside the code), so the plan stays a map-side filter —
     no shuffle on the 100 TB fact side."""
     events = load_table(spark, sf_dir, "events")
-    weights = spark.createDataFrame(
-        sorted(MIXTURE_PCT.items()), "event_type string, pct int"
-    )
+    weights = local_frame(spark, sorted(MIXTURE_PCT.items()), "event_type string, pct int")
     bucket = _shard_col("event_id", 100)
     return (
         events.join(F.broadcast(weights), "event_type", "left")

@@ -21,8 +21,11 @@ the same code is correct on a 1000-executor cluster:
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
+from datetime import datetime, timezone
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, TimestampType
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
@@ -79,3 +82,48 @@ def get_spark(app_name: str = "stripe-sync-engine-spark", shuffle_partitions: in
         .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
     )
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[tuple], schema: StructType | str
+) -> DataFrame:
+    """A DataFrame over rows that already sit on the driver (webhook
+    bodies, API pages, query terms), planned as a ``LocalTableScan``.
+
+    ``spark.createDataFrame(list)`` plans as a pickled Python RDD
+    (``Scan ExistingRDD``): every job that reads it launches Python-worker
+    tasks to unpickle the rows, and a webhook batch's parse→project
+    lineage re-runs them inside each entity's write job. Measured on 4
+    cores: a 10-row frame + ``from_json`` + ``collect`` took 0.296 s from
+    a list and 0.029 s from a ``pyarrow.Table``. So the rows are built
+    into an Arrow table column by column, each column typed by its Spark
+    field (never inferred from the values), and handed to
+    ``createDataFrame``, which turns a ``pyarrow.Table`` into a local
+    relation whatever the Arrow conf says.
+
+    ``rows`` are positional tuples in ``schema`` order (a ``StructType``
+    or a DDL string). Values follow ``createDataFrame(list)``'s rules: a
+    naive ``datetime`` in a ``timestamp`` column is a wall-clock time in
+    the system zone."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    fields = schema.fields
+    rows = list(rows)
+    if any(len(r) != len(fields) for r in rows):
+        raise ValueError(f"every row must have {len(fields)} values: {schema.simpleString()}")
+    columns = list(zip(*rows)) if rows else [()] * len(fields)
+    arrays = []
+    for f, col in zip(fields, columns):
+        if isinstance(f.dataType, TimestampType):
+            col = [
+                v.astimezone(timezone.utc)
+                if isinstance(v, datetime) and v.tzinfo is None
+                else v
+                for v in col
+            ]
+        arrays.append(pa.array(col, type=to_arrow_type(f.dataType)))
+    table = pa.Table.from_arrays(arrays, names=[f.name for f in fields])
+    return spark.createDataFrame(table, schema)

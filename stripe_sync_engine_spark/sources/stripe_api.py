@@ -10,8 +10,8 @@ protocol is the seam where a real HTTP client would plug in).
 Scan shape at scale: a paginated cursor API is inherently driver-serial
 per entity, so the backfill layer parallelizes ACROSS entities and across
 ``created``-range windows (the reference's own guidance for >10k objects,
-README.md:99-100), and each page-batch becomes a partition-sized
-``createDataFrame`` feeding the merge pipeline.
+README.md:99-100), and each page-batch becomes an Arrow local relation
+(``session.local_frame``) feeding the merge pipeline.
 """
 
 from __future__ import annotations

@@ -44,6 +44,7 @@ from pyspark.sql.types import StringType, StructField, StructType
 
 from stripe_sync_engine_spark.commitio import atomic_write_json
 from stripe_sync_engine_spark.schemas.entities import bucket_key, entity_schema, entity_tables
+from stripe_sync_engine_spark.session import local_frame
 
 DEFAULT_N_BUCKETS = 32
 
@@ -434,7 +435,7 @@ class TableStore:
         schema = StructType.fromJson(manifest["schema"])
         paths = self._bucket_paths(table, manifest, buckets)
         if not paths:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         return self.spark.read.schema(schema).parquet(*paths)
 
     def commits(self, table: str) -> list[int]:
@@ -455,7 +456,7 @@ class TableStore:
         schema = StructType.fromJson(manifest["schema"])
         paths = self._bucket_paths(table, manifest, buckets)
         if not paths:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         return self.spark.read.schema(schema).parquet(*paths)
 
     # -- change data feed ----------------------------------------------
@@ -527,7 +528,7 @@ class TableStore:
 
         def side(manifest, buckets):
             if manifest is None:
-                return self.spark.createDataFrame([], schema)
+                return local_frame(self.spark, [], schema)
             df = self._scan_manifest(table, manifest, buckets)
             return self._align_to(df, schema)
 
@@ -554,7 +555,7 @@ class TableStore:
             obk, nbk = old_manifest["buckets"], new_manifest["buckets"]
             changed = [int(b) for b in set(obk) | set(nbk) if obk.get(b) != nbk.get(b)]
             if not changed:
-                return self.spark.createDataFrame([], out_schema)
+                return local_frame(self.spark, [], out_schema)
         cols = [f.name for f in schema.fields]
         old = side(old_manifest, changed).select(
             F.col(key).alias("_k"), F.struct(*cols).alias("_old")
@@ -1596,7 +1597,7 @@ class TableStore:
             schema = entity_schema(table)
             checksum = hashlib.md5(schema.json().encode()).hexdigest()
             if not self.exists(table):
-                self.write(table, self.spark.createDataFrame([], schema), key=bucket_key(table))
+                self.write(table, local_frame(self.spark, [], schema), key=bucket_key(table))
                 applied.append(table)
             elif latest.get(table) not in (None, checksum):
                 # schema edited after the table was created → apply it

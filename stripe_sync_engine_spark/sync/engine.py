@@ -50,6 +50,7 @@ from stripe_sync_engine_spark.operators.merge import (
 )
 from stripe_sync_engine_spark.operators.validate import validate_enums
 from stripe_sync_engine_spark.schemas.entities import bucket_key, entity_schema
+from stripe_sync_engine_spark.session import local_frame
 from stripe_sync_engine_spark.sources.stripe_api import FLUSH_CHUNK, StripeAPI, to_json_rows
 from stripe_sync_engine_spark.storage import TableStore
 from stripe_sync_engine_spark.sync import registry as R
@@ -97,6 +98,20 @@ API_CONCURRENCY = 10
 # Ids pulled from Spark per driver-side chunk: bounds driver memory (no
 # unbounded collect()) while keeping the thread pool saturated.
 FETCH_CHUNK = 1000
+
+
+def _apply_order(route: tuple) -> tuple:
+    """Order in which a batch's ``(entity, action, ...)`` handler groups
+    apply: by entity, and within an entity full-row upserts before the
+    partial-column ``customer.deleted`` update. The partial update stamps
+    ``last_synced_at``; applied first, it would make an OLDER full-row
+    update in the same batch (``customer.updated``@200 beside
+    ``customer.deleted``@300) lose the timestamp check, so the update's
+    columns would never land. Applied after, the older update lands and
+    the newer delete then sets ``deleted`` on top, as serial replay does;
+    a delete older than the update is skipped by the same check."""
+    entity, action = route[0], route[1]
+    return (entity, action == R.CUSTOMER_DELETED, action)
 
 
 def _chunks(it: Iterable, size: int) -> Iterator[list]:
@@ -205,7 +220,7 @@ class StripeSparkSync:
         src = self.store.read(spec.entity)
         if src is None:
             try:
-                src = self.spark.createDataFrame([], entity_schema(spec.entity))
+                src = local_frame(self.spark, [], entity_schema(spec.entity))
             except KeyError:
                 return  # no schema yet: deferred to _ensure_spec_validated
         schema = contributions(src, spec).schema
@@ -422,7 +437,7 @@ class StripeSparkSync:
     # Parsing & projection
     # ------------------------------------------------------------------
     def events_df_from_json(self, payloads: list[str]) -> DataFrame:
-        df = self.spark.createDataFrame([(p,) for p in payloads], _RAW_EVENT_SCHEMA)
+        df = local_frame(self.spark, [(p,) for p in payloads], _RAW_EVENT_SCHEMA)
         # The raw strings live on the DRIVER (an HTTP webhook body is a
         # Python list by nature) — remember them on the frame so
         # process_webhook_events can do its routing/probe bookkeeping in
@@ -495,8 +510,10 @@ class StripeSparkSync:
         # parity-pinned) each upsert's Spark probe job — the distributed
         # parse→project lineage still runs UNCHANGED inside each entity's
         # write job, so every stored byte comes from the same expressions
-        # as the generic path. Distributed batches (the streaming webhook
-        # sink) keep the original shape including the persist.
+        # as the generic path; over events_df_from_json's local relation
+        # that re-run costs no Python-worker task. Distributed batches (the
+        # streaming webhook sink) keep the original shape including the
+        # persist.
         payloads = getattr(raw_events, "_stripe_driver_payloads", None)
         envelopes: list[tuple[str | None, dict | None]] | None = None
         if payloads is not None:
@@ -517,7 +534,7 @@ class StripeSparkSync:
             # re-execute the parse→project lineage from the raw strings.
             parsed = parsed.persist()
         try:
-            routes = sorted({(r[0], r[1]) for r in R.EVENT_ROUTES.values()})
+            routes = sorted(set(R.EVENT_ROUTES.values()), key=_apply_order)
             # Driver-side routing plan: which (entity, action) groups exist in
             # this batch. One tiny agg over the batch (not the tables) — or
             # free when the envelopes are driver-known.
@@ -574,25 +591,24 @@ class StripeSparkSync:
 
         Groups whose write-sets overlap (customer.updated and
         customer.deleted both write ``customers``) are chained into one
-        task in sorted route order, so the relative apply-order of
+        task in ``_apply_order``, so the relative apply-order of
         same-table groups stays exactly the serial loop's — parallelism
         never reorders writes to a table, it only overlaps independent
         tables. With an API client attached everything runs serially:
         parent backfill can touch ancestor tables outside the static
         write-set, and API-bound fetches dominate anyway."""
         chains: list[tuple[set[str], list]] = []
-        for grp in groups:  # groups arrive in sorted route order
+        for grp in groups:  # groups arrive in _apply_order
             ws = set(self._write_set(grp[0], grp[1]))
             # a multi-table write-set can bridge several existing chains —
             # coalesce ALL overlapping chains plus this group into one,
-            # restoring sorted route order inside the merged chain so the
+            # restoring _apply_order inside the merged chain so the
             # apply-order matches the serial loop exactly
             overlapping = [c for c in chains if c[0] & ws]
             for c in overlapping:
                 ws |= c[0]
             merged = sorted(
-                [g for c in overlapping for g in c[1]] + [grp],
-                key=lambda g: (g[0], g[1]),
+                [g for c in overlapping for g in c[1]] + [grp], key=_apply_order
             )
             chains = [c for c in chains if c not in overlapping]
             chains.append((ws, merged))
@@ -867,8 +883,8 @@ class StripeSparkSync:
             if not buffer:
                 return
             now = time.time()
-            df = self.spark.createDataFrame(
-                [(p, now) for p in buffer], "payload string, sync_ts double"
+            df = local_frame(
+                self.spark, [(p, now) for p in buffer], "payload string, sync_ts double"
             )
             self._merge("checkout_session_line_items", self._project("checkout_session_line_items", df))
             buffer.clear()
@@ -924,16 +940,16 @@ class StripeSparkSync:
             else:
                 buf.append(row)
             if len(buf) + len(dels) >= FLUSH_CHUNK:
-                yield self.spark.createDataFrame(buf, schema), dels
+                yield local_frame(self.spark, buf, schema), dels
                 buf, dels = [], []
         if buf or dels:
-            yield self.spark.createDataFrame(buf, schema), dels
+            yield local_frame(self.spark, buf, schema), dels
 
     def _delete_ids(self, entity: str, ids: list[str]) -> None:
         """Hard-delete rows whose upstream object no longer exists.
         Bucket-pruned like the merge: only buckets holding the keys are
         anti-joined and rewritten."""
-        keys = self.spark.createDataFrame([(i,) for i in ids], "id string")
+        keys = local_frame(self.spark, [(i,) for i in ids], "id string")
         with self._table_write_lock(entity):
             if not self.store.exists(entity):
                 return
@@ -973,10 +989,10 @@ class StripeSparkSync:
         for row in _concurrent_fetch(expand, needs.toLocalIterator()):
             buf.append(row)
             if len(buf) >= FLUSH_CHUNK:
-                yield self.spark.createDataFrame(buf, schema)
+                yield local_frame(self.spark, buf, schema)
                 buf = []
         if buf:
-            yield self.spark.createDataFrame(buf, schema)
+            yield local_frame(self.spark, buf, schema)
 
     # -- parent backfill ---------------------------------------------------
     def _backfill_parents(self, entity: str, rows: DataFrame, depth: int) -> None:
@@ -1028,8 +1044,8 @@ class StripeSparkSync:
             if not fetched:
                 continue
             now = time.time()
-            pdf = self.spark.createDataFrame(
-                [(p, now) for p in fetched], "payload string, sync_ts double"
+            pdf = local_frame(
+                self.spark, [(p, now) for p in fetched], "payload string, sync_ts double"
             )
             parent_rows = self._project(parent, pdf)
             self._backfill_parents(parent, parent_rows, depth + 1)
@@ -2163,8 +2179,10 @@ class StripeSparkSync:
             if not buffer:
                 return
             now = time.time()
-            df = self.spark.createDataFrame(
-                [(p, now) for p in to_json_rows(buffer)], "payload string, sync_ts double"
+            df = local_frame(
+                self.spark,
+                [(p, now) for p in to_json_rows(buffer)],
+                "payload string, sync_ts double",
             )
             rows = self._project(entity, df)
             if self.config.backfill_related_entities:
@@ -2210,8 +2228,10 @@ class StripeSparkSync:
             if not buffer:
                 return
             now = time.time()
-            df = self.spark.createDataFrame(
-                [(p, now) for p in to_json_rows(buffer)], "payload string, sync_ts double"
+            df = local_frame(
+                self.spark,
+                [(p, now) for p in to_json_rows(buffer)],
+                "payload string, sync_ts double",
             )
             self._merge("payment_methods", self._project("payment_methods", df))
             synced += len(buffer)
@@ -2246,9 +2266,7 @@ class StripeSparkSync:
                 return entity
             return None
         now = time.time()
-        df = self.spark.createDataFrame(
-            [(json.dumps(obj), now)], "payload string, sync_ts double"
-        )
+        df = local_frame(self.spark, [(json.dumps(obj), now)], "payload string, sync_ts double")
         rows = self._project(entity, df)
         if self.config.backfill_related_entities:
             self._backfill_parents(entity, rows, depth=0)

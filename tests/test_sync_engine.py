@@ -85,6 +85,53 @@ def test_customer_deleted_partial(engine):
     assert int(row["last_synced_at"].timestamp()) == 200
 
 
+# same-batch update + partial delete: the full-row upsert applies before
+# the partial customer.deleted, so an older update is not overtaken by the
+# newer delete's last_synced_at (its columns land, then deleted=true goes
+# on top), and an older delete loses to the newer update — both as if the
+# events were replayed one batch at a time
+def _customer_update_delete_batch(updated_at, deleted_at):
+    return [
+        fx.event(
+            "customer.updated",
+            fx.customer(id="cus_D", name="Ada", email="new@example.com"),
+            created=updated_at,
+        ),
+        fx.event(
+            "customer.deleted",
+            {"id": "cus_D", "object": "customer", "deleted": True},
+            created=deleted_at,
+        ),
+    ]
+
+
+def _webhook_engine(spark, path):
+    return StripeSparkSync(spark, TableStore(spark, str(path)), api=None)
+
+
+def test_update_then_newer_partial_delete_in_one_batch(spark, tmp_path):
+    eng = _webhook_engine(spark, tmp_path / "wh")
+    process(eng, fx.event("customer.created", fx.customer(id="cus_D", email="old@example.com"), created=100))
+    process(eng, *_customer_update_delete_batch(updated_at=200, deleted_at=300))
+    row = table_rows(eng, "customers")["cus_D"]
+    assert row["email"] == "new@example.com"
+    assert row["deleted"] is True
+    assert int(row["last_synced_at"].timestamp()) == 300
+
+
+def test_newer_update_beats_older_partial_delete_in_one_batch(spark, tmp_path):
+    batch = _customer_update_delete_batch(updated_at=300, deleted_at=200)
+    eng = _webhook_engine(spark, tmp_path / "wh_batch")
+    process(eng, *batch)
+    serial = _webhook_engine(spark, tmp_path / "wh_serial")
+    for e in batch:
+        process(serial, e)
+    row = table_rows(eng, "customers")["cus_D"]
+    assert row["deleted"] is False
+    assert row["email"] == "new@example.com"
+    assert table_rows(eng, "customers") == table_rows(serial, "customers")
+
+
 # 5. hard deletes
 def test_product_hard_delete(engine):
     process(engine, fx.event("product.created", fx.product(id="prod_Z"), created=100))
@@ -445,6 +492,8 @@ def test_driver_known_batch_equals_distributed_batch(spark, tmp_path):
             df = eng.events_df_from_json(payloads)
             assert getattr(df, "_stripe_driver_payloads", None) is not None
         else:
+            # pickled Python rows, not events_df_from_json's Arrow local
+            # relation: the comparison also cross-checks the two inputs
             df = spark.createDataFrame([(p,) for p in payloads], _RAW_EVENT_SCHEMA)
         counts = eng.process_webhook_events(df)
         results[mode] = (
@@ -899,7 +948,7 @@ def test_vacuum_sweeps_old_orphans_on_commit(spark, tmp_path):
 # groups run on concurrent driver threads. The final table state must be
 # IDENTICAL to the serial loop's — including same-table groups
 # (customer.updated + customer.deleted both write ``customers``), which
-# must stay chained in sorted route order, never reordered by threading.
+# must stay chained in one apply order, never reordered by threading.
 def test_parallel_chains_match_serial(spark, tmp_path):
     def mixed_batch():
         return [
@@ -913,8 +962,8 @@ def test_parallel_chains_match_serial(spark, tmp_path):
                 created=100,
             ),
             # same-table conflict pair: deleted (partial) then an update at
-            # a LATER ts — serial route order applies customer_deleted
-            # before upsert; the upsert's newer ts must win either way
+            # a LATER ts — the chain applies the upsert before the partial
+            # customer_deleted; the upsert's newer ts must win either way
             fx.event("customer.deleted", {"id": "cus_p2", "object": "customer"}, created=200),
             fx.event("customer.updated", fx.customer(id="cus_p2", name="B"), created=300),
         ]
